@@ -1,27 +1,37 @@
-"""Generic exact kNN join via cell-ring expansion — the one planner behind
-every nearest/n-nearest family in the reference:
+"""Generic exact kNN join — the one planner behind every nearest/n-nearest
+family in the reference:
 
 * kd points  (K1/K4: ``/root/reference/locus/kd.py:176-374``)
 * R-tree boxes (R7/R9: ``/root/reference/locus/r.py:453-635``)
 * segments to point / to segment (S1-S8: ``/root/reference/locus/segmental.py``)
 
-The reference prunes with per-node lower bounds on a heap frontier
-(``kd.py:368``, ``r.py:592-610``, ``_core/segmental.py:82-153``).  The
-distributed analogue: join probes against targets in Chebyshev cell annuli of
-geometrically growing width, maintain a per-probe running top-k, and settle a
-probe once its k-th best squared distance is within the squared distance from
-the probe's geometry to the nearest *uncovered* region.  Exactness holds
-because (a) the exact dist² is evaluated on every candidate and (b) the
-settle bound is conservative (shrunk by a float-fuzz margin far above ULP
-scale, far below cell scale).
+Three evaluators, tried in this order:
 
-Every round is one distributed broadcast-hash join (probe annuli are tiny
-relative to targets) + one window; the driver loop only synchronizes rounds —
-ring counts stay O(log gridsize) thanks to geometric annulus growth, so the
-pattern holds at 1000-executor scale where each round is a full-cluster job.
+1. **One-pass** (``"brute"``) when ``k >= |targets|`` or ``|probes| x
+   |targets| <= BRUTE_MAX_PAIRS`` (16M, set below the measured seg-seg
+   ring-vs-one-pass crossover near 20M pairs).  The collected probe frame
+   ships to every target partition, a numpy kernel emits each partition's
+   exact top-k per probe, and one window keeps the global k best: a single
+   shuffle instead of the ring loop's two blocking jobs and fresh Catalyst
+   plan per round, which dominate small joins.
+2. **Broadcast ring**: the distributed analogue of the reference's pruning
+   with per-node lower bounds on a heap frontier (``kd.py:368``,
+   ``r.py:592-610``, ``_core/segmental.py:82-153``).  Join probes against
+   targets in Chebyshev cell annuli of geometrically growing width, maintain
+   a per-probe running top-k, and settle a probe once its k-th best squared
+   distance is within the squared distance from the probe's geometry to the
+   nearest *uncovered* region.  Exactness holds because (a) the exact dist²
+   is evaluated on every candidate and (b) the settle bound is conservative
+   (shrunk by a float-fuzz margin far above ULP scale, far below cell
+   scale).  Each round is one broadcast-hash join (probe annuli are tiny
+   relative to targets) + one aggregation; ring counts stay O(log gridsize)
+   thanks to geometric annulus growth.
+3. **Cogroup ring**: the same rounds, but an annulus frame too wide to
+   broadcast (from ``LOCAL_TOPK_MIN_TARGETS`` targets on) is cogrouped with
+   the targets by cell and ranked by the one-pass path's numpy kernel.
 
 Targets that span multiple cells (boxes, segments) may surface in several
-annuli; rounds therefore dedup on (qid, id) before the top-k window.
+annuli; ring rounds therefore dedup on (qid, id) before the top-k.
 """
 
 from __future__ import annotations
@@ -30,11 +40,16 @@ import os
 import sys
 import time
 from collections.abc import Callable
+from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from locus_spark.cells import GridSpec
+
+if TYPE_CHECKING:
+    import pandas as pd
+    from pyspark.sql.types import StructType
 
 #: set LOCUS_KNN_DEBUG=1 to print per-round ring/unsettled diagnostics
 _DEBUG = os.environ.get("LOCUS_KNN_DEBUG", "") not in ("", "0")
@@ -87,8 +102,18 @@ CAP_SAMPLE_RATE = 16
 #: (and toy-scale tests pin the plain-broadcast plan).
 SCAP_MIN_TARGETS = 100_000
 
+#: the one-pass evaluator runs when k >= |targets| or |probes| x |targets|
+#: is at most this; above it, the ring loop.  Set below the ring-vs-one-pass
+#: crossover of the costliest metric, segment-segment k=5 (4-core host,
+#: local[4], warm min of 3): one-pass costs ~1.3 s + ~0.25 µs per pair
+#: (40 probes: 0.8M pairs 1.5 s, 4M 2.0 s, 10M 3.5 s, 20M 6.3 s, 40M
+#: 11.3 s) while the ring loop never ran under 6.2 s (7.1, 7.7, 14.1, 9.6,
+#: 28.9 s on the same joins) — the two meet near 20M pairs.  Point kNN
+#: (k=10, 200 probes) at 16M pairs: one-pass 1.9 s, ring 2.4 s.
+BRUTE_MAX_PAIRS = 16_000_000
+
 #: evaluator choice of each round of the most recent generic_knn_join call
-#: ("cogroup" | "broadcast" | "broadcast+scap") — introspection for tests,
+#: ("brute" | "cogroup" | "broadcast" | "broadcast+scap") — introspection for tests,
 #: so a forced-path test can assert the forced path actually ran instead of
 #: being silently defanged by a policy change.
 LAST_ROUND_EVALUATORS: list[str] = []
@@ -301,6 +326,65 @@ def _annulus_cells(
     )
 
 
+def _local_topk(
+    targets: pd.DataFrame,
+    probes: pd.DataFrame,
+    k: int,
+    local_dist2: Callable,
+    tie_desc_id: bool,
+    probe_out: list[str],
+    target_out: list[str],
+) -> pd.DataFrame:
+    """Exact top-k of ``targets`` for every row of ``probes``: the numpy
+    kernel behind both the cogroup ring evaluator (per cell) and the
+    one-pass evaluator (per target partition).  Emits ``probe_out`` +
+    ``target_out`` + ``dist2`` with ``min(k, len(targets))`` rows per probe
+    — the distributed analogue of the reference's bounded heap
+    (reference ``locus/kd.py:227-237``)."""
+    import numpy as np
+    import pandas as pd
+
+    out_names = [*probe_out, *target_out, "dist2"]
+    if len(targets) == 0 or len(probes) == 0:
+        return pd.DataFrame({c: pd.Series(dtype="float64") for c in out_names})
+    tie = targets["id"].to_numpy()
+    # desc-id families sort ascending on ~id, the round aggregation's
+    # tie_struct_val: -id wraps at Long.MIN_VALUE
+    order = np.argsort(~tie if tie_desc_id else tie, kind="stable")
+    targets = targets.iloc[order].reset_index(drop=True)
+    nt = len(targets)
+    k_eff = min(k, nt)
+    target_arrs = {c: targets[c].to_numpy() for c in target_out}
+    chunks = []
+    # bound the distance-matrix footprint: metrics allocate up to ~15
+    # (nt x nq) float64 temporaries (segment-segment), so cap entries
+    # per chunk at 8M (~64 MB/array)
+    chunk = max(1, 8_000_000 // nt)
+    for s in range(0, len(probes), chunk):
+        rp = probes.iloc[s : s + chunk]
+        d2 = local_dist2(targets, rp)  # (nt, n_probes) float64
+        # rows are pre-sorted by the tie key, so a stable argsort on
+        # dist2 realizes the exact (dist2, tie) order incl. duplicates
+        sel = np.argsort(d2, axis=0, kind="stable")[:k_eff]
+        block = {
+            c: np.repeat(rp[c].to_numpy()[None, :], k_eff, axis=0).ravel()
+            for c in probe_out
+        }
+        for c in target_out:
+            block[c] = target_arrs[c][sel].ravel()
+        block["dist2"] = np.take_along_axis(d2, sel, axis=0).ravel()
+        chunks.append(pd.DataFrame(block))
+    return pd.concat(chunks, ignore_index=True)
+
+
+def _out_schema(probe_fields: list, target_fields: list) -> StructType:
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    return StructType(
+        [*probe_fields, *target_fields, StructField("dist2", DoubleType())]
+    )
+
+
 def _cogroup_topk(
     target_cells: DataFrame,
     ann: DataFrame,
@@ -317,61 +401,64 @@ def _cogroup_topk(
     PER covering probe; with skewed data a fringe probe next to a hot cell
     drags the whole cell through the window's sort — measured 2.6·10^8 rows
     and a >600 s spill for 4k probes over 16M points.  Here targets are
-    cogrouped with the probe-annulus pairs BY CELL and a vectorized numpy
-    kernel emits only the k best rows per (probe, cell), so the downstream
-    global window sees ≤ k·cells_per_probe rows per probe.  This is the
-    distributed analogue of the reference's per-node bounded heap
-    (/root/reference/locus/kd.py:227-237).
+    cogrouped with the probe-annulus pairs BY CELL and :func:`_local_topk`
+    emits only the k best rows per (probe, cell), so the downstream global
+    window sees ≤ k·cells_per_probe rows per probe.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     ann = ann.select(*probe_out, "_jc")
     cells = ann.select("_jc").distinct()
     tsub = target_cells.join(F.broadcast(cells), ["_jc"])
     a_fields = {f.name: f for f in ann.schema.fields}
     t_fields = {f.name: f for f in target_cells.schema.fields}
-    out_schema = StructType(
-        [a_fields[c] for c in probe_out]
-        + [t_fields[c] for c in target_out]
-        + [StructField("dist2", DoubleType())]
+    out_schema = _out_schema(
+        [a_fields[c] for c in probe_out], [t_fields[c] for c in target_out]
     )
-    out_names = [*probe_out, *target_out, "dist2"]
 
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def fn(left, right):
         # left: targets in this cell; right: probes whose annulus covers it
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({c: pd.Series(dtype="float64") for c in out_names})
-        tie = left["id"].to_numpy()
-        order = np.argsort(-tie if tie_desc_id else tie, kind="stable")
-        left = left.iloc[order].reset_index(drop=True)
-        nt = len(left)
-        k_eff = min(k, nt)
-        target_arrs = {c: left[c].to_numpy() for c in target_out}
-        chunks = []
-        # bound the distance-matrix footprint: metrics allocate up to ~15
-        # (nt x nq) float64 temporaries (segment-segment), so cap entries
-        # per chunk at 8M (~64 MB/array)
-        chunk = max(1, 8_000_000 // nt)
-        for s in range(0, len(right), chunk):
-            rp = right.iloc[s : s + chunk]
-            d2 = local_dist2(left, rp)  # (nt, n_probes) float64
-            # rows are pre-sorted by the tie key, so a stable argsort on
-            # dist2 realizes the exact (dist2, tie) order incl. duplicates
-            sel = np.argsort(d2, axis=0, kind="stable")[:k_eff]
-            block = {
-                c: np.repeat(rp[c].to_numpy()[None, :], k_eff, axis=0).ravel()
-                for c in probe_out
-            }
-            for c in target_out:
-                block[c] = target_arrs[c][sel].ravel()
-            block["dist2"] = np.take_along_axis(d2, sel, axis=0).ravel()
-            chunks.append(pd.DataFrame(block))
-        return pd.concat(chunks, ignore_index=True)
+        return _local_topk(
+            left, right, k, local_dist2, tie_desc_id, probe_out, target_out
+        )
 
     grouped = tsub.groupBy("_jc").cogroup(ann.groupBy("_jc"))
     return grouped.applyInPandas(fn, out_schema)
+
+
+def _one_pass_topk(
+    targets: DataFrame,
+    probe_rows: pd.DataFrame,
+    probe_fields: list,
+    k: int,
+    local_dist2: Callable,
+    tie_desc_id: bool,
+    w: Window,
+) -> DataFrame:
+    """All-pairs evaluator for small joins: no rings, no round state.
+
+    ``probe_rows`` (the collected probe frame) ships to every task with
+    the kernel; each target partition emits its exact local top-k per
+    probe through :func:`_local_topk`, and one ``row_number`` over ``w``
+    keeps the global k best.  The whole plan is a single shuffle, against
+    two blocking jobs plus a fresh Catalyst plan per ring round."""
+    probe_out = [f.name for f in probe_fields]
+    target_out = targets.columns
+
+    def fn(batches):
+        import pandas as pd
+
+        frames = list(batches)
+        if frames:
+            yield _local_topk(
+                pd.concat(frames, ignore_index=True), probe_rows, k,
+                local_dist2, tie_desc_id, probe_out, target_out,
+            )
+
+    rn = F.row_number().over(w).cast("long")
+    return (
+        targets.mapInPandas(fn, _out_schema(probe_fields, targets.schema.fields))
+        .withColumn("rn", rn)
+        .filter(F.col("rn") <= k)
+    )
 
 
 def generic_knn_join(
@@ -381,10 +468,10 @@ def generic_knn_join(
     k: int,
     grid: GridSpec,
     dist2: Column,
+    local_dist2: Callable,
     tie_desc_id: bool = False,
     dedup: bool = False,
     max_rounds: int = 64,
-    local_dist2: Callable | None = None,
 ) -> DataFrame:
     """Exact top-k join.
 
@@ -393,6 +480,8 @@ def generic_knn_join(
                         cells for multi-cell geometries).
     ``probes``        — output of :func:`probe_frame`.
     ``dist2``         — squared-distance Column over the joined row.
+    ``local_dist2``   — numpy mirror of ``dist2``: ``(targets_pdf,
+                        probes_pdf) -> (n_targets, n_probes)`` float64.
     ``tie_desc_id``   — R-tree family breaks distance ties by *largest* id
                         (``/root/reference/locus/r.py:599-606``); kd and
                         segmental by smallest.
@@ -419,13 +508,23 @@ def generic_knn_join(
     out_cols = [*probe_payload, *target_payload, "dist2"]
     out_cols = [c for c in out_cols if c not in PROBE_BBOX_COLS]
 
-    if k >= n_targets:
-        # O3 short-circuit (/root/reference/locus/kd.py:216-220 etc.)
-        pairs = F.broadcast(probes.drop(*PROBE_CELL_COLS)).join(targets)
-        return (
-            pairs.withColumn("dist2", dist2)
-            .select(*out_cols, F.row_number().over(w).cast("long").alias("rn"))
-        )
+    # One-pass evaluator when all pairs are cheap: always when k covers
+    # every target (reference ``locus/kd.py:216-220``), else when probes
+    # x targets fits BRUTE_MAX_PAIRS.  The bounded collect doubles as the
+    # probe count and is skipped outright when targets alone exceed it.
+    max_probes = None if k >= n_targets else BRUTE_MAX_PAIRS // n_targets
+    if max_probes is None or max_probes > 0:
+        probe_fields = [f for f in probes.schema.fields if f.name in out_cols]
+        head = probes.select(*[f.name for f in probe_fields])
+        if max_probes is not None:
+            head = head.limit(max_probes + 1)
+        probe_rows = head.toPandas()
+        if max_probes is None or len(probe_rows) <= max_probes:
+            LAST_ROUND_EVALUATORS[:] = ["brute"]
+            return _one_pass_topk(
+                targets, probe_rows, probe_fields, k, local_dist2,
+                tie_desc_id, w,
+            )
 
     scale = max(
         abs(grid.min_x), abs(grid.max_x), abs(grid.min_y), abs(grid.max_y),
@@ -448,7 +547,7 @@ def generic_knn_join(
     # slowdown at 16M rows — and there the loop starts at a single ring.
     import math
 
-    use_cogroup = local_dist2 is not None and n_targets >= LOCAL_TOPK_MIN_TARGETS
+    use_cogroup = n_targets >= LOCAL_TOPK_MIN_TARGETS
     if use_cogroup:
         # Always start at a single cell: the cogroup kernel's dominant cost
         # is per-(cell, probe) GROUP overhead in applyInPandas, which scales

@@ -42,12 +42,14 @@ def _brute_point_seg_d2(px, py, x1, y1, x2, y2):
     return (px - cx) ** 2 + (py - cy) ** 2
 
 
-def test_multicell_target_across_rounds_no_duplicates(spark):
+def test_multicell_target_across_rounds_no_duplicates(spark, monkeypatch):
     """Probe at (0.5, 0.5): round 1 rings [0,4] see nothing, round 2 [5,14]
     finds the long segment via 15 covering cells, round 3 [15,...] re-finds
     the SAME segment via cell (15, 8) while the probe is still unsettled
     (k=2, only 1 candidate so far) — the carried-state + fresh-candidate
-    merge must collapse to one row per (qid, id)."""
+    merge must collapse to one row per (qid, id).  BRUTE_MAX_PAIRS = 0 keeps
+    the join on the ring loop."""
+    monkeypatch.setattr(knn_plan, "BRUTE_MAX_PAIRS", 0)
     segs = spark.createDataFrame(SEGS, ["id", "x1", "y1", "x2", "y2"])
     probes = spark.createDataFrame([(1, 0.5, 0.5)], ["qid", "x", "y"])
     out = segment_knn_to_point_join(segs, probes, k=2, grid=GRID).collect()

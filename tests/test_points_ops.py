@@ -109,12 +109,16 @@ def test_nearest_duplicate_points_tie_by_id(spark):
     assert len(got) == 1 and got[0].id == 0 and got[0].dist2 == 0.0
 
 
-def test_knn_hot_cluster_skew(spark):
+def test_knn_hot_cluster_skew(spark, monkeypatch):
     """Regression for the hot-cell candidate explosion: half the points in one
     dense cluster, probes both inside and on the fringe — exercises the _cap
     branch-and-bound pruning in the broadcast round evaluator (the cogroup
     kernel itself is covered by test_cogroup_local_topk_path_matches_broadcast,
-    which forces it via LOCAL_TOPK_MIN_TARGETS)."""
+    which forces it via LOCAL_TOPK_MIN_TARGETS).  BRUTE_MAX_PAIRS = 0 keeps
+    this toy-sized join on the ring loop."""
+    import locus_spark.plans.knn as knnplan
+
+    monkeypatch.setattr(knnplan, "BRUTE_MAX_PAIRS", 0)
     rng = np.random.RandomState(7)
     hot = rng.uniform(-1.0, 1.0, size=(400, 2))
     cold = rng.uniform(-100.0, 100.0, size=(400, 2))
@@ -187,9 +191,11 @@ def test_cogroup_local_topk_path_matches_broadcast(spark, monkeypatch):
         )
         return out
 
-    # arming use_cogroup alone doesn't force the kernel (only annulus frames
+    # BRUTE_MAX_PAIRS = 0 keeps every join on the ring loop.  Arming
+    # use_cogroup alone doesn't force the kernel (only annulus frames
     # too wide to broadcast route there) — drop the width guard to -1 so
     # every round takes the cogrouped kernel, and assert it actually did
+    monkeypatch.setattr(knnplan, "BRUTE_MAX_PAIRS", 0)
     monkeypatch.setattr(knnplan, "LOCAL_TOPK_MIN_TARGETS", 1)
     monkeypatch.setattr(knnplan, "ANN_BROADCAST_MAX_ROWS", -1)
     got_cogroup = run_all()
@@ -220,7 +226,6 @@ def test_cogroup_local_topk_path_matches_broadcast(spark, monkeypatch):
     assert "broadcast+scap" in set(knnplan.LAST_ROUND_EVALUATORS)
     assert "cogroup" not in set(knnplan.LAST_ROUND_EVALUATORS)
     assert got_midscale == got_broadcast
-    monkeypatch.setattr(knnplan, "SCAP_MIN_TARGETS", 100_000)
     # and both match brute force for the points family
     want = _brute_knn(pts, probes, 3)
     by_q = {}
