@@ -7,13 +7,16 @@ family in the reference:
 
 Three evaluators, tried in this order:
 
-1. **One-pass** (``"brute"``) when ``k >= |targets|`` or ``|probes| x
-   |targets| <= BRUTE_MAX_PAIRS`` (16M, set below the measured seg-seg
-   ring-vs-one-pass crossover near 20M pairs).  The collected probe frame
-   ships to every target partition, a numpy kernel emits each partition's
-   exact top-k per probe, and one window keeps the global k best: a single
-   shuffle instead of the ring loop's two blocking jobs and fresh Catalyst
-   plan per round, which dominate small joins.
+1. **One-pass** (``"brute"``) when ``k >= |targets|``, or when ``|targets|
+   <= BRUTE_MAX_TARGETS`` (2M) and ``|probes| x |targets| <=
+   BRUTE_MAX_PAIRS`` (60M).  Both are measured ring-vs-one-pass
+   crossovers: the target bound with a single probe, the pair bound for
+   point kNN, whose ring catches up at fewer pairs than segment-segment's
+   (figures at the constants).  The collected probe frame ships to every
+   target partition, a numpy kernel emits each partition's exact top-k per
+   probe, and one window keeps the global k best: a single shuffle instead
+   of the ring loop's two blocking jobs and fresh Catalyst plan per round,
+   which dominate small joins.
 2. **Broadcast ring**: the distributed analogue of the reference's pruning
    with per-node lower bounds on a heap frontier (``kd.py:368``,
    ``r.py:592-610``, ``_core/segmental.py:82-153``).  Join probes against
@@ -102,15 +105,24 @@ CAP_SAMPLE_RATE = 16
 #: (and toy-scale tests pin the plain-broadcast plan).
 SCAP_MIN_TARGETS = 100_000
 
-#: the one-pass evaluator runs when k >= |targets| or |probes| x |targets|
-#: is at most this; above it, the ring loop.  Set below the ring-vs-one-pass
-#: crossover of the costliest metric, segment-segment k=5 (4-core host,
-#: local[4], warm min of 3): one-pass costs ~1.3 s + ~0.25 µs per pair
-#: (40 probes: 0.8M pairs 1.5 s, 4M 2.0 s, 10M 3.5 s, 20M 6.3 s, 40M
-#: 11.3 s) while the ring loop never ran under 6.2 s (7.1, 7.7, 14.1, 9.6,
-#: 28.9 s on the same joins) — the two meet near 20M pairs.  Point kNN
-#: (k=10, 200 probes) at 16M pairs: one-pass 1.9 s, ring 2.4 s.
-BRUTE_MAX_PAIRS = 16_000_000
+#: the one-pass evaluator runs when k >= |targets|, or when |targets| is at
+#: most BRUTE_MAX_TARGETS and |probes| x |targets| at most BRUTE_MAX_PAIRS;
+#: otherwise the ring loop.  Both are ring-vs-one-pass crossovers measured
+#: on a 4-core host (local[4], clustered perfbench-style inputs cached in 8
+#: partitions, min of 2 warm runs, one-pass vs ring).  One-pass pays ~0.5 µs
+#: per target to ship it through Arrow, whatever the probe count, while a
+#: one-round ring over points costs ~2 s at any size: with 1 probe (k=1)
+#: one-pass wins at 1M points (2.0 vs 3.5 s), the two tie at 2M (2.3 vs
+#: 2.1 s) and the ring wins from 4M (3.4 vs 2.3 s; 16M: 8.6 vs 2.0 s).
+BRUTE_MAX_TARGETS = 2_000_000
+#: Per pair, point kNN (k=10) crosses first: one-pass wins at 60M pairs
+#: (200 probes x 300k points 5.2 vs 6.1 s, 300 x 200k 4.4 vs 5.3 s, and
+#: at the corner of both bounds, 30 x 2M, 5.8 vs 7.4 s), the ring at 100M
+#: (5.5 vs 7.2 s, 5.7 vs 6.5 s).  Segment-segment (k=5), the
+#: costliest metric, crosses later: one-pass wins at 100M pairs (100 probes
+#: x 1M segments 17.4 vs 18.6 s, 500 x 200k 15.4 vs 18.2 s) and the ring at
+#: 200M (31.6 vs 26.9 s; 1000 x 200k a tie, 28.9 vs 29.8 s).
+BRUTE_MAX_PAIRS = 60_000_000
 
 #: evaluator choice of each round of the most recent generic_knn_join call
 #: ("brute" | "cogroup" | "broadcast" | "broadcast+scap") — introspection for tests,
@@ -431,15 +443,21 @@ def _one_pass_topk(
     k: int,
     local_dist2: Callable,
     tie_desc_id: bool,
-    w: Window,
+    tie: Column,
 ) -> DataFrame:
     """All-pairs evaluator for small joins: no rings, no round state.
 
     ``probe_rows`` (the collected probe frame) ships to every task with
     the kernel; each target partition emits its exact local top-k per
-    probe through :func:`_local_topk`, and one ``row_number`` over ``w``
-    keeps the global k best.  The whole plan is a single shuffle, against
-    two blocking jobs plus a fresh Catalyst plan per ring round."""
+    probe through :func:`_local_topk`, and one ``row_number`` over (dist²,
+    ``tie``) keeps the global k best.  The whole plan is a single shuffle,
+    against two blocking jobs plus a fresh Catalyst plan per ring round.
+
+    A target with null or NaN geometry has a NaN dist², which the kernel's
+    argsort puts last and Arrow hands back as null (NaN payload columns come
+    back null too); the merge therefore ranks null dist² last as well, so
+    such a target never displaces a finite one and the ranks do not depend
+    on how the targets are partitioned."""
     probe_out = [f.name for f in probe_fields]
     target_out = targets.columns
 
@@ -453,6 +471,7 @@ def _one_pass_topk(
                 local_dist2, tie_desc_id, probe_out, target_out,
             )
 
+    w = Window.partitionBy("qid").orderBy(F.col("dist2").asc_nulls_last(), tie)
     rn = F.row_number().over(w).cast("long")
     return (
         targets.mapInPandas(fn, _out_schema(probe_fields, targets.schema.fields))
@@ -509,10 +528,16 @@ def generic_knn_join(
     out_cols = [c for c in out_cols if c not in PROBE_BBOX_COLS]
 
     # One-pass evaluator when all pairs are cheap: always when k covers
-    # every target (reference ``locus/kd.py:216-220``), else when probes
-    # x targets fits BRUTE_MAX_PAIRS.  The bounded collect doubles as the
-    # probe count and is skipped outright when targets alone exceed it.
-    max_probes = None if k >= n_targets else BRUTE_MAX_PAIRS // n_targets
+    # every target (reference ``locus/kd.py:216-220``), else when targets
+    # fit BRUTE_MAX_TARGETS and probes x targets fits BRUTE_MAX_PAIRS.  The
+    # bounded collect doubles as the probe count and is skipped outright
+    # when the targets alone rule the path out.
+    if k >= n_targets:
+        max_probes = None
+    elif n_targets <= BRUTE_MAX_TARGETS:
+        max_probes = BRUTE_MAX_PAIRS // n_targets
+    else:
+        max_probes = 0
     if max_probes is None or max_probes > 0:
         probe_fields = [f for f in probes.schema.fields if f.name in out_cols]
         head = probes.select(*[f.name for f in probe_fields])
@@ -523,7 +548,7 @@ def generic_knn_join(
             LAST_ROUND_EVALUATORS[:] = ["brute"]
             return _one_pass_topk(
                 targets, probe_rows, probe_fields, k, local_dist2,
-                tie_desc_id, w,
+                tie_desc_id, tie,
             )
 
     scale = max(

@@ -7,6 +7,7 @@ from __future__ import annotations
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from knn_evaluators import EVALUATORS, knn_evaluator
 
 from locus_spark.operators.boxes import (
     box_knn_join,
@@ -115,15 +116,17 @@ def test_box_knn_matches_brute(spark, raw_b, probes, k):
     pdf = spark.createDataFrame(
         [(i, x, y) for i, (x, y) in enumerate(probes)], "qid long, x double, y double"
     )
-    got = box_knn_join(_boxes_df(spark, boxes), pdf, k).collect()
     want = _brute_box_knn(boxes, probes, k)
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
-    assert set(by_q) == set(want)
-    for qid, rows in by_q.items():
-        rows.sort()
-        assert [(d, i) for _, d, i in rows] == want[qid]
+    for evaluator in EVALUATORS:
+        with knn_evaluator(evaluator, len(boxes), k):
+            got = box_knn_join(_boxes_df(spark, boxes), pdf, k).collect()
+        by_q = {}
+        for r in got:
+            by_q.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
+        assert set(by_q) == set(want)
+        for qid, rows in by_q.items():
+            rows.sort()
+            assert [(d, i) for _, d, i in rows] == want[qid]
 
 
 def test_box_knn_tie_prefers_larger_id(spark):

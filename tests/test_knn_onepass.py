@@ -3,9 +3,9 @@ window merge) against the ring loop, forced with ``BRUTE_MAX_PAIRS = 0``.
 
 Every family runs over targets laid out one partition per chunk, so the
 per-partition kernel sees duplicate geometry split across partitions, a
-partition holding fewer than k targets and an empty partition.  Coordinates
-are finite throughout: rows with null/NaN geometry are outside the kNN
-contract these tests pin."""
+partition holding fewer than k targets and an empty partition.  The parity
+tests use finite coordinates only: the ring loop's order for null/NaN
+geometry is not pinned; the one-pass order is, by its own test."""
 
 from __future__ import annotations
 
@@ -152,3 +152,38 @@ def test_box_knn_desc_id_tie_at_long_min(spark, monkeypatch, path):
     got = box_knn_join(boxes, probes, 1, grid=GRID).collect()
     assert set(knn_plan.LAST_ROUND_EVALUATORS) == {path}
     assert [(r.id, r.dist2) for r in got] == [(0, 0.0)]
+
+
+def test_one_pass_ranks_null_and_nan_targets_last(spark):
+    """A null or NaN coordinate gives a NaN dist², which comes back null: the
+    one-pass path ranks such targets after every finite one, in id order,
+    whichever partition holds them."""
+    finite = [(i, float(i), 0.0) for i in range(4)]
+    bad = [(10, None, 0.0), (11, float("nan"), 0.0)]
+    probes = spark.createDataFrame([(0, 0.0, 0.0)], "qid long, x double, y double")
+    ranked = [(1, 0, 0.0), (2, 1, 1.0), (3, 2, 4.0), (4, 3, 9.0),
+              (5, 10, None), (6, 11, None)]
+    # the bad rows share the nearest target's partition, then sit alone
+    for chunks in ([bad + finite[:1], finite[1:]], [finite, bad[:1], bad[1:]]):
+        points = _partitioned(spark, chunks, "id long, x double, y double")
+        for k in (4, 6):
+            got = knn_join(points, probes, k, grid=GRID).collect()
+            assert knn_plan.LAST_ROUND_EVALUATORS == ["brute"]
+            assert sorted((r.rn, r.id, r.dist2) for r in got) == ranked[:k]
+
+
+def test_target_bound_routes_to_ring(spark, monkeypatch):
+    """Above BRUTE_MAX_TARGETS the ring loop runs however few the pairs,
+    unless k covers every target."""
+    targets, probes = _points(spark), _probe_points(spark)
+    n_targets = targets.count()
+    monkeypatch.setattr(knn_plan, "BRUTE_MAX_TARGETS", n_targets - 1)
+    ring = _run(knn_join, targets, probes, K)
+    assert knn_plan.LAST_ROUND_EVALUATORS
+    assert "brute" not in knn_plan.LAST_ROUND_EVALUATORS
+    monkeypatch.setattr(knn_plan, "BRUTE_MAX_TARGETS", n_targets)
+    assert _run(knn_join, targets, probes, K) == ring
+    assert knn_plan.LAST_ROUND_EVALUATORS == ["brute"]
+    monkeypatch.setattr(knn_plan, "BRUTE_MAX_TARGETS", 0)
+    _run(knn_join, targets, probes, n_targets)
+    assert knn_plan.LAST_ROUND_EVALUATORS == ["brute"]

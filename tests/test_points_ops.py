@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from knn_evaluators import EVALUATORS, knn_evaluator
 
 from locus_spark.cells import GridSpec
 from locus_spark.operators.points import (
@@ -53,20 +54,22 @@ def _brute_knn(pts, probes, k):
     st.integers(min_value=2, max_value=5),
 )
 def test_knn_join_matches_brute(spark, pts, probes, k, res):
-    got = knn_join(
-        _points_df(spark, pts), _probes_df(spark, probes), k,
-        grid=None if res % 2 else GridSpec(
-            min(p[0] for p in pts), min(p[1] for p in pts),
-            max(p[0] for p in pts), max(p[1] for p in pts), res),
-    ).collect()
     want = _brute_knn(pts, probes, k)
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
-    assert set(by_q) == set(want)
-    for qid, rows in by_q.items():
-        rows.sort()
-        assert [(d, i) for _, d, i in rows] == want[qid]
+    for evaluator in EVALUATORS:
+        with knn_evaluator(evaluator, len(pts), k):
+            got = knn_join(
+                _points_df(spark, pts), _probes_df(spark, probes), k,
+                grid=None if res % 2 else GridSpec(
+                    min(p[0] for p in pts), min(p[1] for p in pts),
+                    max(p[0] for p in pts), max(p[1] for p in pts), res),
+            ).collect()
+        by_q = {}
+        for r in got:
+            by_q.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
+        assert set(by_q) == set(want)
+        for qid, rows in by_q.items():
+            rows.sort()
+            assert [(d, i) for _, d, i in rows] == want[qid]
 
 
 def test_knn_short_circuit_k_ge_size(spark):

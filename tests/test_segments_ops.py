@@ -6,6 +6,7 @@ from __future__ import annotations
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from knn_evaluators import EVALUATORS, knn_evaluator
 
 from locus_spark.operators.segments import (
     segment_knn_join,
@@ -67,16 +68,18 @@ def test_segment_knn_to_point_matches_brute(spark, segs, probes, k):
     pdf = spark.createDataFrame(
         [(i, x, y) for i, (x, y) in enumerate(probes)], "qid long, x double, y double"
     )
-    got = segment_knn_to_point_join(_segs_df(spark, segs), pdf, k).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
-    for qid, (px, py) in enumerate(probes):
-        scored = sorted(
-            (( _d2_point_seg(px, py, *s), i) for i, s in enumerate(segs)),
-        )[:k]
-        rows = sorted(by_q[qid])
-        assert [(d, i) for _, d, i in rows] == scored
+    for evaluator in EVALUATORS:
+        with knn_evaluator(evaluator, len(segs), k):
+            got = segment_knn_to_point_join(_segs_df(spark, segs), pdf, k).collect()
+        by_q = {}
+        for r in got:
+            by_q.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
+        for qid, (px, py) in enumerate(probes):
+            scored = sorted(
+                (( _d2_point_seg(px, py, *s), i) for i, s in enumerate(segs)),
+            )[:k]
+            rows = sorted(by_q[qid])
+            assert [(d, i) for _, d, i in rows] == scored
 
 
 @settings(max_examples=6, deadline=None)
@@ -87,14 +90,16 @@ def test_segment_knn_to_point_matches_brute(spark, segs, probes, k):
 )
 def test_segment_knn_to_segment_matches_brute(spark, segs, probes, k):
     pdf = _segs_df(spark, probes, qid=True)
-    got = segment_knn_join(_segs_df(spark, segs), pdf, k).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
-    for qid, q in enumerate(probes):
-        scored = sorted(((_d2_seg_seg(q, s), i) for i, s in enumerate(segs)))[:k]
-        rows = sorted(by_q[qid])
-        assert [(d, i) for _, d, i in rows] == scored
+    for evaluator in EVALUATORS:
+        with knn_evaluator(evaluator, len(segs), k):
+            got = segment_knn_join(_segs_df(spark, segs), pdf, k).collect()
+        by_q = {}
+        for r in got:
+            by_q.setdefault(r.qid, []).append((r.rn, r.dist2, r.id))
+        for qid, q in enumerate(probes):
+            scored = sorted(((_d2_seg_seg(q, s), i) for i, s in enumerate(segs)))[:k]
+            rows = sorted(by_q[qid])
+            assert [(d, i) for _, d, i in rows] == scored
 
 
 def test_crossing_segments_distance_zero(spark):
